@@ -9,8 +9,9 @@ import org.apache.spark.sql.types.DoubleType
   * functions into every session built with
   * `--conf spark.sql.extensions=graft.GraftExtensions` (the standard way a
   * Spark library ships Catalyst additions — no imperative registration
-  * call needed on the user side). The same descriptors back
-  * [[GraftExtensions.registerAll]] for sessions that already exist.
+  * call needed on the user side). The same descriptors back the typed
+  * Scala constructors in [[graft.functions.Fns]] (`Fns.tPValue`, …), so
+  * the SQL and Column surfaces share one definition.
   *
   * Every function is a pure Catalyst expression tree (custom codegen
   * expressions or compositions of built-ins) — they stay inside
@@ -184,27 +185,5 @@ object GraftExtensions {
           plan
         })
     }
-  }
-
-  /** Imperative flavor for sessions built without the extensions conf
-    * (e.g. notebook sessions): registers the same functions as temp
-    * functions and installs the plan-tier extensions through the
-    * `experimental` hooks. Idempotent.
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    descriptors.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(id.funcName, builder, "built-in")
-    }
-    tableFunctions.foreach { case (id, info, builder) =>
-      spark.sessionState.tableFunctionRegistry
-        .registerFunction(id, info, builder)
-    }
-    if (!spark.experimental.extraStrategies.contains(plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ plans.AsOfJoinStrategy
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[plans.RangeJoinBinning]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ plans.RangeJoinBinning(spark)
   }
 }

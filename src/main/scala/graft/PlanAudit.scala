@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Developer tool: dump formatted physical plans for headline queries so
   * scale review (pushdown, broadcast, TakeOrderedAndProject, shuffle
   * counts) is a one-command check. Not part of the driver contract.
@@ -13,15 +11,7 @@ object PlanAudit {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("w01_topk_variance", "p09_qc_sample_filter", "j01_outer_merge_runs",
         "w03_bh_adjust", "d02_ngram_jaccard", "n01_ann_cosine_topk")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // mirror the Verify/Bench sessions: injected functions + rules active
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = LocalSession("4")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n================ $n ================")

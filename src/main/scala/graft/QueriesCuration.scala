@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.Fns
 import graft.llm.{Curation, TextAnalysis}
 
 /** Corpus-curation queries: the post-dedup / pre-training steps of an LLM
@@ -774,13 +775,12 @@ object QueriesCuration {
     // itself (strcmp95 conventions: ⌊max/2⌋−1 window, integer-halved
     // transpositions, 0.7 boost threshold, both-empty → 0).
     Q("c18_fuzzy_scores", (s, d) => {
-      GraftExtensions.registerAll(s)
       val (crm, web) = erMentions(s, d)
       erCandidates(crm, web)
         .select(col("a.id").as("crm_id"), col("b.id").as("web_id"),
           col("lev"),
-          round(expr("graft_jaro_winkler(a.name, b.name)"), 6).as("jw"),
-          (expr("graft_jaro_winkler(a.name, b.name)") >= 0.85).as("accept"))
+          round(Fns.jaroWinkler(col("a.name"), col("b.name")), 6).as("jw"),
+          (Fns.jaroWinkler(col("a.name"), col("b.name")) >= 0.85).as("accept"))
         .orderBy("crm_id", "web_id")
     }, Some(erSql +
       """SELECT a.id AS crm_id, b.id AS web_id,

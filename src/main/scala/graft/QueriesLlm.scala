@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.Fns
 import graft.llm.{Dedup, Multimodal, Similarity, TextAnalysis}
 
 /** LLM-training-data pipeline queries over documents/embeddings
@@ -1114,7 +1115,6 @@ object QueriesLlm {
     // own nfc_normalize — the two independent Unicode tables must agree
     // byte-for-byte for the hash check to pass.
     Q("t22_nfc_normalize", (s, d) => {
-      GraftExtensions.registerAll(s)
       val sp = s
       import sp.implicits._
       val base = docs(s, d).select(col("doc_id"), col("text"), col("source"))
@@ -1124,7 +1124,7 @@ object QueriesLlm {
           (9103L, "nai\u0308ve approach", "srcU")) // decomposed i + U+0308
           .toDF("doc_id", "text", "source"))
       base.select(col("source"), col("text"),
-          expr("graft_nfc(text)").as("norm"))
+          Fns.nfc(col("text")).as("norm"))
         .groupBy("source").agg(
           count(lit(1)).as("n_docs"),
           sum(when(col("norm") =!= col("text"), 1L).otherwise(0L)).as("n_changed"),

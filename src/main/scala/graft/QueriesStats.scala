@@ -1056,7 +1056,6 @@ object QueriesStats {
     // end (see k03_dmp_moderated), so the TVF is held to the IDENTICAL
     // DuckDB SQL — full moderated-lifecycle TVF parity, not just pass-1.
     Q("e14_sql_tvf_dmp", (s, d) => {
-      GraftExtensions.registerAll(s)
       s.sql(s"SELECT * FROM graft_dmp('$d') ORDER BY probe_id")
     }, Some(ctes.replaceFirst("WITH ", "WITH RECURSIVE ") + dmpMomSql +
       dmpModeratedTailSql + "\n" +
@@ -1070,7 +1069,6 @@ object QueriesStats {
     // graft_dmp_pass1 TVF must hash-match the identical DuckDB SQL the
     // Scala-API k03_dmp_pass1 matches — TVF parity, end to end.
     Q("e15_sql_tvf_pass1", (s, d) => {
-      GraftExtensions.registerAll(s)
       s.sql(s"SELECT * FROM graft_dmp_pass1('$d') ORDER BY probe_id")
     }, Some(dmpPass1OracleSql)),
 
@@ -1693,12 +1691,11 @@ object QueriesStats {
     // feeding it is the shared mwChainSql statistic, verbatim from k10's
     // own oracle.
     Q("k10_ranksum_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val bg = Tables.betaLong(s, d)
         .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
       val stats = Analytic.mannWhitney(bg, "probe_id", "beta", "group", "WT", "MUT")
         .filter(col("n1") >= 3 && col("n2") >= 3)
-        .withColumn("p_value", expr("graft_chisq_sf(z * z, 1.0)"))
+        .withColumn("p_value", Fns.chisqSf(col("z") * col("z"), lit(1.0)))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
         .select(col("probe_id"), col("n1"), col("n2"), col("u1"),
           round(col("z"), 6).as("z"), round(col("p_value"), 6).as("p_value"),
@@ -1747,12 +1744,11 @@ object QueriesStats {
     // [0,1] clamp. RankTestSpec asserts the series against commons-math
     // approximateP.
     Q("k11_ks_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val bg = Tables.betaLong(s, d)
         .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
       val stats = Analytic.ksTest(bg, "probe_id", "beta", "group", "WT", "MUT")
         .filter(col("n1") >= 3 && col("n2") >= 3)
-        .withColumn("p_value", expr("graft_ks_sf(ks_stat)"))
+        .withColumn("p_value", Fns.ksSf(col("ks_stat")))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
         .select(col("probe_id"), col("n1"), col("n2"),
           round(col("d"), 9).as("d"), round(col("ks_stat"), 6).as("ks_stat"),
@@ -1790,23 +1786,22 @@ object QueriesStats {
     // chain definitions k17/k10/k11 use), and the fused χ²(6) survival is
     // the finite even-df series exp(−x/2)·(1 + x/2 + (x/2)²/2).
     Q("k19_fisher_combined", (s, d) => {
-      GraftExtensions.registerAll(s)
       val bg = Tables.betaLong(s, d)
         .join(broadcast(Tables.sampleSheet(s, d)), "sample_id")
       val pWelch = welchT(s, d)
-        .select(col("probe_id"), expr("graft_t_pvalue(t, df)").as("p_w"))
+        .select(col("probe_id"), Fns.tPValue(col("t"), col("df")).as("p_w"))
       val pRank = Analytic.mannWhitney(bg, "probe_id", "beta", "group", "WT", "MUT")
         .filter(col("n1") >= 3 && col("n2") >= 3)
-        .select(col("probe_id"), expr("graft_chisq_sf(z * z, 1.0)").as("p_r"))
+        .select(col("probe_id"), Fns.chisqSf(col("z") * col("z"), lit(1.0)).as("p_r"))
       val pKs = Analytic.ksTest(bg, "probe_id", "beta", "group", "WT", "MUT")
         .filter(col("n1") >= 3 && col("n2") >= 3)
-        .select(col("probe_id"), expr("graft_ks_sf(ks_stat)").as("p_k"))
+        .select(col("probe_id"), Fns.ksSf(col("ks_stat")).as("p_k"))
       // ln(p) guards: a p that underflows to 0 clamps to the smallest
       // positive double (ln ≈ −744.4) so X stays finite and ordering holds
       def lnp(c: org.apache.spark.sql.Column) = log(greatest(c, lit(4.9e-324)))
       val fused = pWelch.join(pRank, "probe_id").join(pKs, "probe_id")
         .withColumn("x2", lit(-2.0) * (lnp(col("p_w")) + lnp(col("p_r")) + lnp(col("p_k"))))
-        .withColumn("p_value", expr("graft_chisq_sf(x2, 6.0)"))
+        .withColumn("p_value", Fns.chisqSf(col("x2"), lit(6.0)))
       Analytic.bhAdjust(fused, "p_value", "probe_id")
         .select(col("probe_id"),
           round(col("p_w"), 6).as("p_w"), round(col("p_r"), 6).as("p_r"),
@@ -1886,7 +1881,6 @@ object QueriesStats {
     // incomplete beta agrees with the closed forms to ~1e-13, far inside
     // round-6. The Spark side stays generic in df.
     Q("k12_spearman_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = Analytic.spearmanMatrix(Tables.betaLong(s, d),
           "probe_id", "sample_id", "beta")
         .filter(col("n_shared") >= 4 && abs(col("rho")) < 1.0)
@@ -1894,7 +1888,7 @@ object QueriesStats {
           sqrt((col("n_shared") - 2).cast("double") /
             (lit(1.0) - col("rho") * col("rho"))))
         .withColumn("p_value",
-          expr("graft_t_pvalue(t_stat, CAST(n_shared - 2 AS DOUBLE))"))
+          Fns.tPValue(col("t_stat"), (col("n_shared") - 2).cast("double")))
         .withColumn("pair", concat(col("sa"), lit("|"), col("sb")))
       Analytic.bhAdjust(stats, "p_value", "pair")
         .select(col("sa"), col("sb"), col("n_shared"),
@@ -2036,10 +2030,9 @@ object QueriesStats {
     // round-6). ExtensionsSpec asserts graft_f_sf against commons-math
     // FDistribution.
     Q("k13_anova_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = anovaF(s, d)
         .withColumn("p_value",
-          expr("graft_f_sf(f, CAST(df1 AS DOUBLE), CAST(df2 AS DOUBLE))"))
+          Fns.fSf(col("f"), col("df1").cast("double"), col("df2").cast("double")))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
         .select(col("probe_id"), col("n"), col("df1"), col("df2"),
           round(col("f"), 6).as("f"), round(col("p_value"), 6).as("p_value"),
@@ -2422,10 +2415,9 @@ object QueriesStats {
     // df1 = 2 collapses the F survival to (d2/(d2+2f))^{d2/2} — the same
     // I_x(a,1) = x^a move as k13, replayed on the shared statistic chain.
     Q("k18_bf_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = brownForsythe(s, d)
         .withColumn("p_value",
-          expr("graft_f_sf(bf_f, CAST(df1 AS DOUBLE), CAST(df2 AS DOUBLE))"))
+          Fns.fSf(col("bf_f"), col("df1").cast("double"), col("df2").cast("double")))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
         .select(col("probe_id"), col("n"), col("df1"), col("df2"),
           round(col("bf_f"), 6).as("bf_f"),
@@ -2457,8 +2449,7 @@ object QueriesStats {
     // the shared welchChainSql (t, df) — agreement ~1e-13, far inside
     // round-6.
     Q("k17_welch_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
-      val stats = welchT(s, d).withColumn("p_value", expr("graft_t_pvalue(t, df)"))
+      val stats = welchT(s, d).withColumn("p_value", Fns.tPValue(col("t"), col("df")))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
         .select(col("probe_id"), col("n1"), col("n2"),
           round(col("t"), 6).as("t"), round(col("df"), 6).as("df"),
@@ -2497,9 +2488,8 @@ object QueriesStats {
     // k21 move; commons-math agrees with exp(−x/2) to ~1 ulp, far inside
     // round-6).
     Q("k20_kw_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = kruskalWallis(s, d)
-        .withColumn("p_value", expr("graft_chisq_sf(h, 2.0)"))
+        .withColumn("p_value", Fns.chisqSf(col("h"), lit(2.0)))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
         .select(col("probe_id"), col("n"), round(col("h"), 6).as("h"),
           round(col("p_value"), 6).as("p_value"), round(col("fdr"), 6).as("fdr"))
@@ -2531,9 +2521,8 @@ object QueriesStats {
     // replay over the shared dunnChainSql statistic, BH tie-broken on the
     // same probe|pair key as the Spark side.
     Q("k37_dunn_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = dunnPairs(s, d)
-        .withColumn("p_value", expr("graft_chisq_sf(z * z, 1.0)"))
+        .withColumn("p_value", Fns.chisqSf(col("z") * col("z"), lit(1.0)))
         .withColumn("key", concat(col("probe_id"), lit("|"), col("pair")))
       Analytic.bhAdjust(stats, "p_value", "key")
         .select(col("probe_id"), col("pair"), round(col("z"), 6).as("z"),
@@ -2679,7 +2668,6 @@ object QueriesStats {
     // over the shared welchChainSql; ExactInferenceSpec additionally pins
     // both one-sided p's against commons-math's TDistribution cdf.
     Q("k40_tost_equivalence", (s, d) => {
-      GraftExtensions.registerAll(s)
       val delta = 0.20 // equivalence margin in beta units — wide enough
       // that ~11% of sf0.01 probes DEMONSTRATE equivalence at these n (the
       // gate binds both ways; at 0.1 the per-group SEs swamp every margin)
@@ -2689,11 +2677,11 @@ object QueriesStats {
         .withColumn("t2", (col("delta_beta") + lit(delta)) / col("se_beta"))
         // p_upper = P(T < t1) (reject Δ ≥ δ), p_lower = P(T > t2)
         .withColumn("p_upper",
-          when(col("t1") >= 0, lit(1.0) - expr("graft_t_pvalue(t1, df)") / 2.0)
-            .otherwise(expr("graft_t_pvalue(-t1, df)") / 2.0))
+          when(col("t1") >= 0, lit(1.0) - Fns.tPValue(col("t1"), col("df")) / 2.0)
+            .otherwise(Fns.tPValue(-col("t1"), col("df")) / 2.0))
         .withColumn("p_lower",
-          when(col("t2") >= 0, expr("graft_t_pvalue(t2, df)") / 2.0)
-            .otherwise(lit(1.0) - expr("graft_t_pvalue(-t2, df)") / 2.0))
+          when(col("t2") >= 0, Fns.tPValue(col("t2"), col("df")) / 2.0)
+            .otherwise(lit(1.0) - Fns.tPValue(-col("t2"), col("df")) / 2.0))
         .withColumn("p_tost", greatest(col("p_upper"), col("p_lower")))
         .select(col("probe_id"), round(col("delta_beta"), 6).as("delta_beta"),
           round(col("se_beta"), 6).as("se_beta"),
@@ -2902,9 +2890,8 @@ object QueriesStats {
     // regularizedGammaQ(1, x/2) and exp(−x/2) agree to ~1 ulp, far inside
     // the round-6 comparison. BH is the w03 SQL mirror.
     Q("k21_jb_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = jarqueBera(s, d)
-        .withColumn("p_value", expr("graft_chisq_sf(jb, 2.0)"))
+        .withColumn("p_value", Fns.chisqSf(col("jb"), lit(2.0)))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
         .select(col("probe_id"), col("n"), round(col("jb"), 6).as("jb"),
           round(col("p_value"), 6).as("p_value"), round(col("fdr"), 6).as("fdr"))
@@ -2946,9 +2933,8 @@ object QueriesStats {
     // FULLY oracle-checked (r9): the erfc replay over the shared
     // mkChainSql statistic.
     Q("k22_mk_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val stats = mannKendall(s, d)
-        .withColumn("p_value", expr("graft_chisq_sf(z * z, 1.0)"))
+        .withColumn("p_value", Fns.chisqSf(col("z") * col("z"), lit(1.0)))
       Analytic.bhAdjust(stats, "p_value", "probe_id")
         .select(col("probe_id"), col("n"), col("s_stat"),
           round(col("z"), 6).as("z"), round(col("p_value"), 6).as("p_value"),
@@ -3256,7 +3242,6 @@ object QueriesStats {
     // p via the codegen chi-square survival function. Rows-only (the CDF
     // has no SQL analog; the statistic and cells ride k27's oracle).
     Q("k27_chisq_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       val cells = chisqCells(s, d)
       val agg = cells.agg(
         countDistinct("lang").as("n_lang"),
@@ -3287,7 +3272,7 @@ object QueriesStats {
         .withColumn("df", ((col("n_lang") - 1) * (col("n_source") - 1)).cast("double"))
         .select(col("n_lang"), col("n_source"), col("n_cells"),
           round(col("chisq"), 6).as("chisq"), col("df"),
-          round(expr("graft_chisq_sf(chisq, df)"), 6).as("p_value"))
+          round(Fns.chisqSf(col("chisq"), col("df")), 6).as("p_value"))
       // FULLY oracle-checked (r8): the 5-language × 20-source grid fixes
       // df = 4·19 = 76 — EVEN, so the χ² survival is the elementary
       // exp(−x/2)·Σ_{i<df/2}(x/2)^i/i!, which DuckDB replays as an ordered
@@ -3411,11 +3396,10 @@ object QueriesStats {
     // χ²(1) sf = erfc(√(x/2)) through the Cody replay over the shared
     // lrChainSql statistic.
     Q("k28_logrank_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       Survival.logRank(kmSubjects(s, d), "cohort_a")
         .select(col("grp_a"), col("o_a"), round(col("e_a"), 6).as("e_a"),
           round(col("chi2"), 6).as("chi2"),
-          round(expr("graft_chisq_sf(chi2, 1.0)"), 6).as("p_value"))
+          round(Fns.chisqSf(col("chi2"), lit(1.0)), 6).as("p_value"))
     }, Some(
       s"""WITH $kmSubjSql,
          |$lrRiskSql,
@@ -3438,7 +3422,6 @@ object QueriesStats {
     // 1e-7) is FULLY oracle-checked — DuckDB's C lgamma and commons-math's
     // Lanczos agree far below the 1e-6 rounding.
     Q("k29_fisher_exact", (s, d) => {
-      GraftExtensions.registerAll(s)
       import org.apache.spark.sql.expressions.Window
       val qc = Tables.detpLong(s, d)
         .withColumn("k", round(col("pval") * 1010).cast("bigint"))
@@ -3456,16 +3439,15 @@ object QueriesStats {
         .withColumn("c1", col("a") + col("c"))
         .withColumn("c2", col("b") + col("dd"))
         .withColumn("n", col("r1") + col("r2"))
+      def lg(c: org.apache.spark.sql.Column) = Fns.lgamma(c.cast("double"))
       val sup = tab.withColumn("kk",
           explode(sequence(greatest(lit(0L), col("r1") + col("c1") - col("n")),
             least(col("r1"), col("c1")))))
-        .withColumn("logp", expr(
-          """graft_lgamma(CAST(r1 + 1 AS DOUBLE)) - graft_lgamma(CAST(kk + 1 AS DOUBLE))
-            | - graft_lgamma(CAST(r1 - kk + 1 AS DOUBLE))
-            | + graft_lgamma(CAST(r2 + 1 AS DOUBLE)) - graft_lgamma(CAST(c1 - kk + 1 AS DOUBLE))
-            | - graft_lgamma(CAST(r2 - c1 + kk + 1 AS DOUBLE))
-            | + graft_lgamma(CAST(c1 + 1 AS DOUBLE)) + graft_lgamma(CAST(c2 + 1 AS DOUBLE))
-            | - graft_lgamma(CAST(n + 1 AS DOUBLE))""".stripMargin.replace("\n", " ")))
+        .withColumn("logp",
+          lg(col("r1") + 1) - lg(col("kk") + 1) - lg(col("r1") - col("kk") + 1)
+            + lg(col("r2") + 1) - lg(col("c1") - col("kk") + 1)
+            - lg(col("r2") - col("c1") + col("kk") + 1)
+            + lg(col("c1") + 1) + lg(col("c2") + 1) - lg(col("n") + 1))
       val wAll = Window.orderBy("kk")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       val wRun = Window.orderBy("kk")
@@ -3680,11 +3662,10 @@ object QueriesStats {
     // FULLY oracle-checked (r9): the erfc replay over the shared
     // cmhChainSql statistic.
     Q("k32_cmh_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       cmhTest(s, d)
         .select(col("n_strata"), round(col("cmh"), 6).as("cmh"),
           round(col("or_mh"), 6).as("or_mh"),
-          round(expr("graft_chisq_sf(cmh, 1.0)"), 6).as("p_value"))
+          round(Fns.chisqSf(col("cmh"), lit(1.0)), 6).as("p_value"))
     }, Some(ctes + cmhChainSql +
       s""",
          |pvarg AS (SELECT n_strata, cmh AS cmh_s, or_mh, sqrt(cmh / 2.0) AS ex FROM cmh)
@@ -3935,9 +3916,8 @@ object QueriesStats {
     // k28's oracle-checked o_a/e_a EXACTLY. p via the codegen χ²(1)
     // survival function.
     Q("k35_cox_ph", (s, d) => {
-      GraftExtensions.registerAll(s)
       Survival.coxPh(kmSubjects(s, d), "cohort_a")
-        .withColumn("p_value", round(expr("graft_chisq_sf(wald_chi2, 1.0)"), 6))
+        .withColumn("p_value", round(Fns.chisqSf(col("wald_chi2"), lit(1.0)), 6))
     }, None),
 
     // K35 interior oracle: the Cox fit's ENTIRE distributed input — the
@@ -4093,7 +4073,6 @@ object QueriesStats {
     // (SqlOracles.studentTIntDfPv — the k12_spearman_inference move) on
     // top of the shared olsCte chain.
     Q("k42_ols_inference", (s, d) => {
-      GraftExtensions.registerAll(s)
       // persisted: consumed twice by the unionAll below (the w18 rule —
       // without this the nine-moment aggregate runs once per branch)
       val base = graft.ops.Caches.track(probeOls(s, d).persist())
@@ -4104,7 +4083,7 @@ object QueriesStats {
           (col("b_age") / 997.0).as("b"), col("t_age").as("t_stat"),
           col("df")))
         .withColumn("p_value",
-          expr("graft_t_pvalue(t_stat, CAST(df AS DOUBLE))"))
+          Fns.tPValue(col("t_stat"), col("df").cast("double")))
         .withColumn("key", concat(col("probe_id"), lit("|"), col("coef")))
       Analytic.bhAdjust(long, "p_value", "key")
         .select(col("probe_id"), col("coef"), round(col("b"), 6).as("b"),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Developer tool: replicate the sf0.1 testdata N× with per-replica key
@@ -23,15 +23,7 @@ object ScaleSmoke {
     val src = if (rest.length > 1) rest(1) else "/root/testdata/sf0.1"
     val out = s"${Q.scratch}/scale$reps"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
 
     def replicate(name: String)(f: (DataFrame, Int) => DataFrame): Unit =
       if (!reuse) {

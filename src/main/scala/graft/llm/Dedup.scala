@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fns
+
 /** Deduplication operators, exact through near-dup. Scale design: every
   * pairwise step is blocked — candidates only ever meet through a join key
   * (content hash, shared shingle, LSH band bucket), never a cross join, so
@@ -25,11 +27,10 @@ object Dedup {
     * fan-out is the distinct-shingle count, not the token count.
     */
   def shingles(docs: DataFrame, n: Int = 3): DataFrame = {
-    graft.GraftExtensions.registerAll(docs.sparkSession)
     docs
       .withColumn("__norm", TextAnalysis.normalized(col("text")))
       .select(col("doc_id"),
-        explode(expr(s"graft_shingles(__norm, $n)")).as("shingle"))
+        explode(Fns.shingles(col("__norm"), n)).as("shingle"))
   }
 
   /** Exact n-gram Jaccard similarity for documents sharing >=1 shingle
@@ -135,9 +136,7 @@ object Dedup {
     // was the dominant row-local cost of the e12/streaming monitor plans;
     // DedupSpec pins value parity with the batch minhashSignatures
     // aggregate, permutation by permutation.
-    call_function("graft_minhash_sigs",
-      call_function("graft_shingles", TextAnalysis.normalized(text), lit(n)),
-      lit(numPerm))
+    Fns.minhashSigs(Fns.shingles(TextAnalysis.normalized(text), n), numPerm)
 
   /** Per-(band, bucket) rows with the full signature carried along:
     * `(doc_id, <passthrough cols>, band, sig, sigv)` — the row-local
@@ -149,7 +148,6 @@ object Dedup {
                           passthrough: Seq[String] = Nil): DataFrame = {
     require(bands >= 1 && numPerm % bands == 0,
       s"bands ($bands) must divide numPerm ($numPerm)")
-    graft.GraftExtensions.registerAll(docs.sparkSession)
     val rowsPerBand = numPerm / bands
     val withSig = docs
       .withColumn("sigv", minhashSignatureArray(col("text"), numPerm))
@@ -442,11 +440,10 @@ object Dedup {
     */
   def winnowFingerprints(docs: DataFrame, k: Int = 12, w: Int = 4,
                          textCol: String = "text"): DataFrame = {
-    graft.GraftExtensions.registerAll(docs.sparkSession)
     docs
       .withColumn("__norm", TextAnalysis.normalized(col(textCol)))
       .select(col("doc_id"),
-        explode(expr(s"graft_winnow(__norm, $k, $w)")).as("s"))
+        explode(Fns.winnow(col("__norm"), k, w)).as("s"))
       .select(col("doc_id"), col("s.pos").as("pos"), col("s.fp").as("fp"))
   }
 

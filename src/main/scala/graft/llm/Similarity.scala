@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Fns
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`embeddings(vec_id, embedding array<float>, label)`).
   *
@@ -17,19 +19,7 @@ object Similarity {
   private def withVec(emb: DataFrame): DataFrame =
     emb.withColumn("v", col("embedding").cast("array<double>"))
 
-  /** `graft_dot` as a Column (functions/VecDot.scala): the same left-fold
-    * arithmetic as `aggregate(zip_with(a, b, _*_), 0.0, _+_)` — bit-equal,
-    * oracle-compatible — but one codegen'd primitive loop instead of
-    * CodegenFallback lambda dispatch per element. `dotC(v, v)` is the
-    * squared norm.
-    */
-  private def dotC(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.VecDotProduct(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(a),
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(b)))
-
-  /** dot(v, q) and |v|² via the native `graft_dot` loop (see [[dotC]] —
+  /** dot(v, q) and |v|² via the native `graft_dot` loop (see [[Fns.dot]] —
     * no UDF, no HOF fallback). A zero-norm vector (or query) gets cos =
     * −1, not the NaN that 0/0 would produce — Spark orders NaN ABOVE every
     * real value, so an unguarded zero vector would outrank all true
@@ -38,8 +28,8 @@ object Similarity {
   private def scored(e: DataFrame, qArr: Seq[Double]): DataFrame = {
     val qLit = typedLit(qArr)
     val qNorm = math.sqrt(qArr.map(x => x * x).sum)
-    e.withColumn("dot", dotC(col("v"), qLit))
-      .withColumn("nrm", dotC(col("v"), col("v")))
+    e.withColumn("dot", Fns.dot(col("v"), qLit))
+      .withColumn("nrm", Fns.dot(col("v"), col("v")))
       .withColumn("cos",
         when(col("nrm") > 0 && lit(qNorm) > 0,
           round(col("dot") / sqrt(col("nrm")) / lit(qNorm), 6))
@@ -276,11 +266,7 @@ object Similarity {
     */
   private def nearestC(centers: Array[Array[Double]],
                        v: org.apache.spark.sql.Column) =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.functions.VecNearestCenter(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-          typedLit(centers.map(_.toSeq).toSeq)),
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(v)))
+    Fns.nearest(typedLit(centers.map(_.toSeq).toSeq), v)
 
   /** IVF-style ANN: a k-means coarse quantizer partitions the corpus into
     * nlist cells; a query scores only the nprobe cells whose centroids are
@@ -336,7 +322,7 @@ object Similarity {
   def pqTopK(emb: DataFrame, queryId: Long, k: Int, m: Int = 8,
              codebookSize: Int = 16, rerank: Int = 5): DataFrame = {
     val unit = graft.ops.Caches.track(
-      withVec(emb).withColumn("nrm", sqrt(dotC(col("v"), col("v"))))
+      withVec(emb).withColumn("nrm", sqrt(Fns.dot(col("v"), col("v"))))
         .withColumn("vn", transform(col("v"), x => x / col("nrm")))
         .persist())
     // dim read off the persisted frame — no separate scan of the raw input
@@ -383,7 +369,7 @@ object Similarity {
     // neighbor misses the WHOLE shortlist.
     shortlist.join(unit.select(col("vec_id"), col("vn")), "vec_id")
       .withColumn("cos", // dot of unit vectors = cosine
-        round(dotC(col("vn"), typedLit(q)), 6))
+        round(Fns.dot(col("vn"), typedLit(q)), 6))
       .select("vec_id", "adist", "cos")
       .orderBy(col("cos").desc, col("vec_id").asc)
       .limit(k)
@@ -417,7 +403,7 @@ object Similarity {
   def semanticDedup(emb: DataFrame, ncells: Int, minCos: Double): DataFrame = {
     val e = graft.ops.Caches.track(
       withVec(emb)
-        .withColumn("nrm", sqrt(dotC(col("v"), col("v"))))
+        .withColumn("nrm", sqrt(Fns.dot(col("v"), col("v"))))
         .persist())
     val centers = localKMeans(trainSample(e, "v", 200L * ncells), ncells)
     val assigned = e
@@ -425,7 +411,7 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("v"), col("nrm"))
     val pairs = assigned.as("x").join(assigned.as("y"), "cell")
       .filter(col("x.vec_id") < col("y.vec_id"))
-      .withColumn("dot", dotC(col("x.v"), col("y.v")))
+      .withColumn("dot", Fns.dot(col("x.v"), col("y.v")))
       .withColumn("cos", round(col("dot") / col("x.nrm") / col("y.nrm"), 6))
       .filter(col("cos") >= minCos)
     val droppedRows = pairs
@@ -441,11 +427,11 @@ object Similarity {
     */
   def cosineNearDups(emb: DataFrame, blockCol: String, minCos: Double): DataFrame = {
     val e = withVec(emb)
-      .withColumn("nrm", sqrt(dotC(col("v"), col("v"))))
+      .withColumn("nrm", sqrt(Fns.dot(col("v"), col("v"))))
       .select(col("vec_id"), col(blockCol).as("block"), col("v"), col("nrm"))
     e.as("x").join(e.as("y"), "block")
       .filter(col("x.vec_id") < col("y.vec_id"))
-      .withColumn("dot", dotC(col("x.v"), col("y.v")))
+      .withColumn("dot", Fns.dot(col("x.v"), col("y.v")))
       .withColumn("cos", round(col("dot") / col("x.nrm") / col("y.nrm"), 6))
       .filter(col("cos") >= minCos)
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
@@ -499,7 +485,7 @@ object Similarity {
     // norms once per VECTOR (not per pair — nQueries× less norm work)
     val e = graft.ops.Caches.track(
       withVec(emb).withColumn("bucket", signBucket("v", bits))
-        .withColumn("nrm", dotC(col("v"), col("v")))
+        .withColumn("nrm", Fns.dot(col("v"), col("v")))
         .select("vec_id", "v", "bucket", "nrm")
         .persist())
     val q = e.filter(col("vec_id") < nQueries)
@@ -511,7 +497,7 @@ object Similarity {
     // broadcast(sample)×corpus dot scan runs four times (the w18 rule)
     val pairs = graft.ops.Caches.track(
       e.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("dot", dotC(col("v"), col("qv")))
+        .withColumn("dot", Fns.dot(col("v"), col("qv")))
         .withColumn("cos",
           when(col("nrm") > 0 && col("qnrm") > 0,
             round(col("dot") / sqrt(col("nrm")) / sqrt(col("qnrm")), 6))
@@ -539,7 +525,7 @@ object Similarity {
     val cellDist = graft.ops.Caches.track(
       e.select("vec_id", "v", "nrm").crossJoin(broadcast(centers))
         .withColumn("cdist", round(
-          col("nrm") - lit(2.0) * dotC(col("v"), col("cv")) + col("cnrm"), 6))
+          col("nrm") - lit(2.0) * Fns.dot(col("v"), col("cv")) + col("cnrm"), 6))
         .select("vec_id", "cid", "cdist")
         .persist()) // consumed twice: corpus cells + query probe lists
     val wCell = Window.partitionBy("vec_id")
@@ -579,7 +565,7 @@ object Similarity {
               lit(s" must divide into $m subspaces"))).cast("int")))
         .withColumn("sv",
           slice(col("vn"), (col("s") * col("sub") + 1).cast("int"), col("sub")))
-        .withColumn("svv", dotC(col("sv"), col("sv")))
+        .withColumn("svv", Fns.dot(col("sv"), col("sv")))
         .select("vec_id", "s", "sv", "svv")
         .persist()) // consumed twice: corpus codes + query distance tables
     val seedsC = svs.filter(col("vec_id") >= nQueries &&
@@ -590,7 +576,7 @@ object Similarity {
       .orderBy(col("dsub").asc, col("cid").asc)
     val codes = svs.join(broadcast(seedsC), Seq("s"))
       .withColumn("dsub", round(
-        col("svv") - lit(2.0) * dotC(col("sv"), col("sc")) + col("scc"), 6))
+        col("svv") - lit(2.0) * Fns.dot(col("sv"), col("sc")) + col("scc"), 6))
       .withColumn("rk", row_number().over(wCode))
       .filter(col("rk") === 1)
       .select("vec_id", "s", "cid")
@@ -600,7 +586,7 @@ object Similarity {
         col("sv").as("qsv"), col("svv").as("qsvv"))
       .join(broadcast(seedsC), Seq("s"))
       .withColumn("qdsub", round(
-        col("qsvv") - lit(2.0) * dotC(col("qsv"), col("sc")) + col("scc"), 6))
+        col("qsvv") - lit(2.0) * Fns.dot(col("qsv"), col("sc")) + col("scc"), 6))
       .select("qid", "s", "cid", "qdsub")
     // ADC = fixed-order sum of the m per-subspace lookups (each when-sum
     // sees exactly one non-null row, so no engine-order float hazard)

@@ -561,11 +561,13 @@ object Analytic {
     * cost, so the local path declines and the caller falls through.
     */
   private val SpearmanLocalEventBudget = 300000000L
-  private val SpearmanPackBits = 40 // packed entry: sid << 40 | ar2 (ar2 < 2²⁰ under MaxRows)
+  private val SpearmanPackBits = 40 // packed entry: sid << 40 | ar2 (ar2 ≤ 2·MaxRows+1 < 2²²)
 
   /** Collect the persisted rank table and group it per probe as packed
     * (sampleIndex << 40 | ar2) longs. Caller guarantees rows ≤
-    * [[SpearmanLocalMaxRows]] (which bounds ar2 < 2²⁰ ≪ 2⁴⁰).
+    * [[SpearmanLocalMaxRows]] (which bounds ar2 ≤ 2·MaxRows+1 < 2²² ≪ 2⁴⁰).
+    * Rows whose sample id is absent from `sampleIds` (a NULL sample) are
+    * skipped, as the distributed path drops them at its sample join.
     */
   private def spearmanCollectGroups(rb: DataFrame, probeCol: String,
       sampleCol: String, sampleIds: Array[String])
@@ -575,10 +577,10 @@ object Analytic {
     val byProbe = new java.util.HashMap[String,
       scala.collection.mutable.ArrayBuffer[Long]]()
     rb.select(col(probeCol), col(sampleCol), col("ar2")).collect().foreach { r =>
-      val s = sid.get(r.getString(1)).toLong
-      byProbe.computeIfAbsent(r.getString(0),
+      val s = sid.get(r.getString(1))
+      if (s != null) byProbe.computeIfAbsent(r.getString(0),
         _ => new scala.collection.mutable.ArrayBuffer[Long]()) +=
-        ((s << SpearmanPackBits) | r.getLong(2))
+        ((s.toLong << SpearmanPackBits) | r.getLong(2))
     }
     val probes = new Array[String](byProbe.size())
     val groups = new Array[Array[Long]](byProbe.size())
@@ -872,8 +874,10 @@ object Analytic {
     // ONE samples-bounded aggregate serves the width dispatch (max
     // per-sample probe count), the sample-axis collect (r derivation +
     // dict-encode) and the rb cache fill — was three jobs (r9).
+    // NULL-sample rows never match the sample dictionary (spearmanMatrix's
+    // collect_set drops them the same way)
     val perSample = rb.groupBy(sampleCol).agg(count(lit(1)).as("__n"))
-      .collect()
+      .collect().filterNot(_.isNullAt(0))
     val useDecimal = forceDecimal.getOrElse(
       (if (perSample.isEmpty) 0L else perSample.map(_.getLong(1)).max) > 1300000L)
     val width = if (useDecimal) "decimal(38,0)" else "bigint"

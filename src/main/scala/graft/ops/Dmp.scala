@@ -83,12 +83,11 @@ object Dmp {
     * a df-varying mean offset inflate evar and under-moderate).
     */
   // native codegen expressions (functions/GammaExprs.scala), not UDFs —
-  // these run once per probe, millions of rows at scale; registration is
-  // idempotent and the callers below invoke it before building the column
+  // these run once per probe, millions of rows at scale
   private def adjCol(dfCol: String) =
-    expr(s"graft_digamma(CAST($dfCol AS DOUBLE) / 2)") - log(col(dfCol) / 2)
+    Fns.digamma(col(dfCol).cast("double") / 2) - log(col(dfCol) / 2)
   private def triCol(dfCol: String) =
-    expr(s"graft_trigamma(CAST($dfCol AS DOUBLE) / 2)")
+    Fns.trigamma(col(dfCol).cast("double") / 2)
 
   private def priorFromMoments(emean: Double, evarAdj: Double, etri: Double): Prior = {
     val evar = evarAdj - etri
@@ -112,7 +111,6 @@ object Dmp {
     * aggregated, so the fitted prior is bit-unchanged.
     */
   private[ops] def fitPriorCounted(moments: DataFrame): (Prior, Long) = {
-    registerFunctions(moments.sparkSession)
     val valid = col("s2") > 0 && !isnan(col("s2"))
     val z = when(valid, log(col("s2")) - adjCol("df"))
     val row = moments
@@ -139,7 +137,6 @@ object Dmp {
     * coefficients; per-contrast MoM fit is the per-coef restatement).
     */
   def fitPriorsBy(moments: DataFrame, byCol: String): Map[String, Prior] = {
-    registerFunctions(moments.sparkSession)
     val z = log(col("s2")) - adjCol("df")
     moments
       .filter(col("s2") > 0 && !isnan(col("s2")))
@@ -159,14 +156,6 @@ object Dmp {
       .toMap
   }
 
-  /** Register the engine's native scalar functions in the session's
-    * function registry. Sessions built with
-    * `spark.sql.extensions=graft.GraftExtensions` already have them; this
-    * is the no-restart flavor for pre-existing sessions. Idempotent.
-    */
-  def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.GraftExtensions.registerAll(spark)
-
   /** Pass 3: moderated statistics + BH FDR + the reference's significance
     * call (FDR < 0.05 AND |logFC| > log2(1.5), /root/reference/plots.R:165).
     * The t CDF is a native codegen Expression ([[graft.functions.StudentTPValue]]),
@@ -174,7 +163,6 @@ object Dmp {
     */
   def moderated(moments: DataFrame, prior: Prior,
                 knownRows: Option[Long] = None): DataFrame = {
-    registerFunctions(moments.sparkSession)
     val d0 = if (prior.d0.isInfinite) 1e12 else prior.d0
     val withT = moments
       .withColumn("s2_post",
@@ -182,7 +170,7 @@ object Dmp {
       .withColumn("t_mod",
         col("logfc") / sqrt(col("s2_post") *
           (lit(1.0) / col("n1").cast("double") + lit(1.0) / col("n2").cast("double"))))
-      .withColumn("p_value", expr(s"graft_t_pvalue(t_mod, df + ${d0}D)"))
+      .withColumn("p_value", Fns.tPValue(col("t_mod"), col("df") + lit(d0)))
     Analytic.bhAdjust(withT, "p_value", "probe_id", knownRows = knownRows)
       .withColumn("significant",
         col("fdr") < 0.05 && abs(col("logfc")) > math.log(1.5) / math.log(2))
@@ -251,7 +239,6 @@ object Dmp {
                              contrasts: Seq[(String, String, String)]): DataFrame = {
     val spark = betaWithGroup.sparkSession
     import spark.implicits._
-    registerFunctions(spark)
     // reused by the prior-fit action and the final pass; released by the
     // harness between queries (ops.Caches)
     val mom = Caches.track(multiContrastMoments(betaWithGroup, contrasts).persist())
@@ -269,7 +256,7 @@ object Dmp {
       .withColumn("t_mod",
         col("logfc") / sqrt(col("s2_post") *
           (lit(1.0) / col("n1").cast("double") + lit(1.0) / col("n2").cast("double"))))
-      .withColumn("p_value", expr("graft_t_pvalue(t_mod, df + __d0)"))
+      .withColumn("p_value", Fns.tPValue(col("t_mod"), col("df") + col("__d0")))
     Analytic.bhAdjustBy(withT, "comparison_id", "p_value", "probe_id")
       .withColumn("significant",
         col("fdr") < 0.05 && abs(col("logfc")) > math.log(1.5) / math.log(2))

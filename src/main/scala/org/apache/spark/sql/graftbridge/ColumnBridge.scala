@@ -5,11 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal `private[sql]` bridge: wrap a raw Catalyst Expression as a
-  * `Column` (and back) for the engine's native expressions when a call
-  * site composes them with literal/attribute Columns directly instead of
-  * going through the SQL registry. The only blessed alternatives —
-  * `expr("graft_dot(...)")` strings or session-dependent registration —
-  * are brittle inside library code; this is the same doorway Spark's own
+  * `Column` (and back). [[graft.functions.Fns]] uses it to expose each
+  * injected SQL function as a typed Column constructor built from the same
+  * descriptor as the SQL surface — the same doorway Spark's own
   * `functions._` uses.
   */
 object ColumnBridge {

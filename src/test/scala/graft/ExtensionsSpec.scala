@@ -96,27 +96,61 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
-  test("registerAll exposes the functions to spark.sql, matching Fns columns") {
-    val sp = spark
-    GraftExtensions.registerAll(sp)
-    import sp.implicits._
-    val df = Seq(0.25, 0.5, 0.999, 0.0001).toDF("beta")
-    df.createOrReplaceTempView("ext_betas")
-    val viaSql = sp.sql(
-      """SELECT beta, graft_mvalue(beta) AS m,
-        |       graft_inverse_mvalue(graft_mvalue(beta)) AS roundtrip,
-        |       graft_neglog10(beta) AS nl
-        |FROM ext_betas""".stripMargin)
-    val viaCols = df.select(
-      col("beta"), Fns.mValueClamped(col("beta")).as("m"),
-      Fns.inverseMValue(Fns.mValueClamped(col("beta"))).as("roundtrip"),
-      Fns.negLog10(col("beta")).as("nl"))
-    assert(viaSql.collect().toSeq == viaCols.collect().toSeq)
+  test("every injected SQL function is bit-equal to its Fns constructor") {
+    // (SQL argument list, Scala twin) per descriptor; a function added to
+    // the descriptors without its Fns constructor fails the key-set check
+    val twins: Map[String, (String, org.apache.spark.sql.Column)] = Map(
+      "graft_t_pvalue" -> ("x, df", Fns.tPValue(col("x"), col("df"))),
+      "graft_chisq_sf" -> ("x, df", Fns.chisqSf(col("x"), col("df"))),
+      "graft_f_sf" -> ("x, df, d2", Fns.fSf(col("x"), col("df"), col("d2"))),
+      "graft_ks_sf" -> ("x", Fns.ksSf(col("x"))),
+      "graft_nfc" -> ("s", Fns.nfc(col("s"))),
+      "graft_jaro_winkler" -> ("s, t", Fns.jaroWinkler(col("s"), col("t"))),
+      "graft_dot" -> ("a, b", Fns.dot(col("a"), col("b"))),
+      "graft_nearest" -> ("c, a", Fns.nearest(col("c"), col("a"))),
+      "graft_digamma" -> ("x", Fns.digamma(col("x"))),
+      "graft_trigamma" -> ("x", Fns.trigamma(col("x"))),
+      "graft_lgamma" -> ("x", Fns.lgamma(col("x"))),
+      "graft_shingles" -> ("s, 2", Fns.shingles(col("s"), 2)),
+      "graft_minhash_sigs" -> ("sh, 8", Fns.minhashSigs(col("sh"), 8)),
+      "graft_winnow" -> ("s, 3, 2", Fns.winnow(col("s"), 3, 2)),
+      "graft_mvalue" -> ("x", Fns.mValueClamped(col("x"))),
+      "graft_inverse_mvalue" -> ("x", Fns.inverseMValue(col("x"))),
+      "graft_neglog10" -> ("x", Fns.negLog10(col("x"))))
+    assert(twins.keySet == GraftExtensions.descriptors.map(_._1.funcName).toSet)
+    // p = 0, df = 1, empty strings/arrays, NULLs, negative and tiny inputs
+    val frame = spark.sql(
+      """SELECT * FROM VALUES
+        |  (0, 0.0D, 1.0D, 1.0D, '', '', array(), array(), array(), array(array(0.0D))),
+        |  (1, 2.5D, 1.0D, 7.0D, 'the quick brown fox jumps', 'the quick brown fax',
+        |   array(1.0D, -2.0D), array(0.5D, 3.0D), array('a b', 'b c'),
+        |   array(array(1.0D, -2.0D), array(0.0D, 0.0D))),
+        |  (2, 0.999D, 4.0D, 30.0D, 'cafe\u0301 au lait', 'caf\u00e9 au lait',
+        |   array(1.0D, 2.0D), array(1.0D), array('x'), array(array(9.0D, 9.0D))),
+        |  (3, -1.5D, 10.0D, 2.0D, 'DWAYNE', 'DUANE', array(CAST(NULL AS DOUBLE)),
+        |   array(1.0D), array(''), array(array(1.0D))),
+        |  (4, 1e-300D, 0.5D, 1.0D, 'a', 'a', array(0.25D), array(4.0D), array('a'),
+        |   array(array(0.25D), array(0.25D))),
+        |  (5, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL)
+        |AS t(id, x, df, d2, s, t, a, b, sh, c)""".stripMargin)
+    // bit-level view: doubles by their raw bits, nested values recursively
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case r: org.apache.spark.sql.Row => r.toSeq.map(bits)
+      case xs: scala.collection.Seq[_] => xs.map(bits)
+      case other => other
+    }
+    twins.foreach { case (name, (args, twin)) =>
+      def run(c: org.apache.spark.sql.Column) =
+        frame.select(col("id"), c.as("v")).orderBy("id").collect().map(bits).toSeq
+      val viaSql = run(expr(s"$name($args)"))
+      assert(viaSql == run(twin), name)
+      assert(viaSql.length == 6, name)
+    }
   }
 
   test("injected expressions fold and stay codegen-compatible") {
     val sp = spark
-    GraftExtensions.registerAll(sp)
     // literal input folds at optimization time -> plan carries no function call
     val plan = sp.sql("SELECT graft_inverse_mvalue(0.0) AS x")
       .queryExecution.optimizedPlan.toString
@@ -126,7 +160,6 @@ class ExtensionsSpec extends SparkSpec {
   test("graft_dot is bit-equal to the zip_with/aggregate fold") {
     val sp = spark
     import sp.implicits._
-    GraftExtensions.registerAll(sp)
     val rows = Seq.tabulate(50)(i =>
       (i.toLong, Seq.tabulate(16)(j => math.sin(i * 17 + j) * 3.7),
         Seq.tabulate(16)(j => math.cos(i * 5 + j) / 1.3)))
@@ -149,7 +182,6 @@ class ExtensionsSpec extends SparkSpec {
   test("graft_nearest matches the composed argmin chain, first-min tie rule") {
     val sp = spark
     import sp.implicits._
-    GraftExtensions.registerAll(sp)
     val rows = Seq.tabulate(40)(i =>
       (i.toLong, Seq.tabulate(8)(j => math.sin(i * 13 + j))))
       .toDF("id", "v")
@@ -177,7 +209,6 @@ class ExtensionsSpec extends SparkSpec {
   test("graft_nfc composes combining marks, is idempotent, keeps NFC text as-is") {
     val sp = spark
     import sp.implicits._
-    GraftExtensions.registerAll(sp)
     val rows = Seq("cafe\u0301", "caf\u00e9", "nai\u0308ve", "plain ascii")
       .toDF("s")
       .selectExpr("s", "graft_nfc(s) AS n", "graft_nfc(graft_nfc(s)) AS nn")

@@ -26,6 +26,15 @@ class PcaMdsSpec extends SparkSpec {
       s"PC1 does not separate clusters: a=$a b=$b")
   }
 
+  test("PCA: a failing fit on an empty beta frame leaves no cache behind") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val empty = Seq.empty[(String, String, Double)].toDF("probe_id", "sample_id", "beta")
+    intercept[Exception] {
+      Pca.pcaCoords(empty, topK = 30, k = 2, scale = false).collect()
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("PCA all-CpG dual path matches the bounded path up to sign on complete input") {
     // complete matrix (every probe observed in every sample), topK covers
     // all probes -> both paths see the identical centered matrix

@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.RangeJoinBinning
 import org.apache.spark.sql.DataFrame
 
 /** RangeJoinBinning optimizer rule: semantics preserved, strategy changed
@@ -9,13 +8,10 @@ import org.apache.spark.sql.DataFrame
 class PlansSpec extends SparkSpec {
   import spark.implicits._
 
+  // drives the session's injected RangeJoinBinning through its conf alone
   private def withRule[T](width: Long)(f: => T): T = {
-    spark.experimental.extraOptimizations = Seq(RangeJoinBinning(spark))
     spark.conf.set("spark.graft.rangeJoin.binWidth", width.toString)
-    try f finally {
-      spark.conf.unset("spark.graft.rangeJoin.binWidth")
-      spark.experimental.extraOptimizations = Nil
-    }
+    try f finally spark.conf.unset("spark.graft.rangeJoin.binWidth")
   }
 
   // negative bounds, bin-straddling intervals, an empty [5,5) interval,

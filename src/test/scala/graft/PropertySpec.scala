@@ -219,8 +219,11 @@ class PropertySpec extends SparkSpec {
     samples(Gen.listOfN(400,
       Gen.zip(Gen.choose(0, 60), Gen.choose(0, 7), Gen.choose(0, 12))), 6)
       .foreach { triples =>
-        val df = triples.distinct
-          .map { case (p, s, v) => (f"p$p%03d", s"s$s", v / 12.0) }
+        // plus one NULL-sample row, which the distributed plans drop at
+        // their sample join and the local kernels must skip
+        val df = (triples.distinct
+          .map { case (p, s, v) => (f"p$p%03d", s"s$s", v / 12.0) } :+
+          (("p000", null: String, 0.5)))
           .toDF("probe_id", "sample_id", "beta")
         val localM = Analytic.spearmanMatrix(df, "probe_id", "sample_id", "beta")
           .orderBy("sa", "sb").collect().toSeq
