@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
@@ -16,9 +17,16 @@ import org.apache.spark.sql.types.DoubleType
   * Every function is a pure Catalyst expression tree (custom codegen
   * expressions or compositions of built-ins) — they stay inside
   * whole-stage codegen and fold when given literal inputs.
+  *
+  * It also sets the engine's static-conf defaults
+  * ([[GraftExtensions.sessionDefaults]]). Extensions apply inside
+  * `getOrCreate`, after the SparkContext exists but before the session's
+  * SharedState copies the static SQL confs out of its SparkConf, and — in
+  * a fresh JVM — before `CodeGenerator` sizes its class cache from them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.sessionDefaults(SparkEnv.get.conf)
     GraftExtensions.descriptors.foreach(ext.injectFunction)
     // SQL-surface tier (r8): the flagship pipelines as table-valued
     // functions, so the engine is usable from pure SQL — the shape a
@@ -35,6 +43,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+
+  /** Bound of Spark's JVM-wide cache of compiled whole-stage and projection
+    * classes (`spark.sql.codegen.cache.maxEntries`, Spark default 100). One
+    * sweep of the benchmark's 21 workload queries at sf0.01 compiles about
+    * 340 distinct classes (methyl_pipeline alone about 200), so at 100 every
+    * repeated sweep evicts and Janino-recompiles most of them. The cache
+    * splits its bound over 4 independently evicting LRU segments, hence the
+    * ~6× headroom over the measured working set.
+    */
+  val CodegenCacheEntries = 2048
+
+  /** The engine's defaults for static confs, set only where the user has
+    * not set them (an explicit `--conf` wins).
+    */
+  def sessionDefaults(conf: SparkConf): Unit =
+    conf.setIfMissing("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   private def lit(d: Double): Expression = Literal(d)
   private def dbl(e: Expression): Expression = Cast(e, DoubleType)

@@ -560,7 +560,17 @@ object Analytic {
     * steps the distributed expansion's parallelism wins back its fixed
     * cost, so the local path declines and the caller falls through.
     */
-  private val SpearmanLocalEventBudget = 300000000L
+  private[graft] val SpearmanLocalEventBudget = 300000000L
+
+  /** Whether the local pair kernel's accumulate steps over `groups` — one
+    * per same-probe row pair, Σ C(g, 2) — fit [[SpearmanLocalEventBudget]].
+    * Checked right after the collect, before any sketch or pair work.
+    */
+  private[graft] def spearmanWithinEventBudget(groups: Array[Array[Long]]): Boolean = {
+    var events = 0L
+    groups.foreach(g => events += g.length.toLong * (g.length - 1) / 2)
+    events <= SpearmanLocalEventBudget
+  }
   private val SpearmanPackBits = 40 // packed entry: sid << 40 | ar2 (ar2 ≤ 2·MaxRows+1 < 2²²)
 
   /** Collect the persisted rank table and group it per probe as packed
@@ -603,8 +613,7 @@ object Analytic {
     * sequence), cast to double, keep denx·deny > 0, ρ = num/√(denx·deny).
     * BigInt.toDouble and Decimal.toDouble are both correctly-rounded, so
     * the doubles match bit-for-bit (PropertySpec + the k12 oracles pin
-    * it). Returns None when the pair-event count exceeds the budget —
-    * callers fall through to the distributed plan.
+    * it). Callers check [[spearmanWithinEventBudget]] first.
     *
     * @param cand candidate-pair filter as (saIdx << 32 | sbIdx) keys, or
     *             null for all pairs (the full-matrix kernel)
@@ -612,11 +621,8 @@ object Analytic {
     */
   private def spearmanPairsLocalFrom(spark: org.apache.spark.sql.SparkSession,
       groups: Array[Array[Long]], sampleIds: Array[String],
-      cand: java.util.HashSet[java.lang.Long], tau: Double): Option[DataFrame] = {
+      cand: java.util.HashSet[java.lang.Long], tau: Double): DataFrame = {
     val nS = sampleIds.length
-    var events = 0L
-    groups.foreach(g => events += g.length.toLong * (g.length - 1) / 2)
-    if (events > SpearmanLocalEventBudget) return None
     val mask = (1L << SpearmanPackBits) - 1
     val cells = nS * nS
     val cnt = new Array[Long](cells)
@@ -691,15 +697,18 @@ object Analytic {
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField("rho",
         org.apache.spark.sql.types.DoubleType, nullable = true)))
-    Some(spark.createDataFrame(
-      java.util.Arrays.asList(out.toArray: _*), schema))
+    spark.createDataFrame(java.util.Arrays.asList(out.toArray: _*), schema)
   }
 
-  /** Local full-matrix kernel: collect + all-pairs moments. */
+  /** Local full-matrix kernel: collect + all-pairs moments, or None above
+    * the pair-event budget (the caller falls through to the distributed
+    * plan).
+    */
   private def spearmanMatrixLocal(rb: DataFrame, probeCol: String,
       sampleCol: String, sampleIds: Array[String]): Option[DataFrame] = {
     val (_, groups) = spearmanCollectGroups(rb, probeCol, sampleCol, sampleIds)
-    spearmanPairsLocalFrom(rb.sparkSession, groups, sampleIds, null, Double.NaN)
+    if (!spearmanWithinEventBudget(groups)) None
+    else Some(spearmanPairsLocalFrom(rb.sparkSession, groups, sampleIds, null, Double.NaN))
   }
 
   /** Local thresholded kernel: the identical md5 hyperplane table, exact
@@ -708,12 +717,14 @@ object Analytic {
     * candidate pairs as the distributed plan, then the shared local pair
     * verify restricted to candidates. The sign convention replays
     * `substring(md5(probe || '#' || j), 1, 1) < '8'` as "first digest
-    * byte ≥ 0" (high nibble 0–7 ⟺ non-negative signed byte).
+    * byte ≥ 0" (high nibble 0–7 ⟺ non-negative signed byte). None above
+    * the pair-event budget, checked before the sketch is built.
     */
   private def spearmanThresholdedLocal(rb: DataFrame, probeCol: String,
       sampleCol: String, sampleIds: Array[String], bands: Int, r: Int,
       tau: Double): Option[DataFrame] = {
     val (probes, groups) = spearmanCollectGroups(rb, probeCol, sampleCol, sampleIds)
+    if (!spearmanWithinEventBudget(groups)) return None
     val nS = sampleIds.length
     val nbits = bands * r
     val mask = (1L << SpearmanPackBits) - 1
@@ -797,7 +808,7 @@ object Analytic {
         i += 1
       }
     }
-    spearmanPairsLocalFrom(rb.sparkSession, groups, sampleIds, cand, tau)
+    Some(spearmanPairsLocalFrom(rb.sparkSession, groups, sampleIds, cand, tau))
   }
 
   /** K12 thresholded production variant (r8): emit only sample pairs with

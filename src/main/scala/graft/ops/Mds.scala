@@ -31,6 +31,7 @@ object Mds {
     val ids = pairs.flatMap(p => Seq(p.getString(0), p.getString(1))).distinct.sorted
     val idx = ids.zipWithIndex.toMap
     val n = ids.length
+    require(n >= 2, s"mdsCoords needs at least 2 samples, got $n")
     val d2 = DenseMatrix.zeros[Double](n, n)
     pairs.foreach { p =>
       val (i, j, v) = (idx(p.getString(0)), idx(p.getString(1)), p.getDouble(2))

@@ -60,6 +60,9 @@ object Pca {
     // closure and defeat codegen.
     val topProbes = Analytic.topKByVariance(beta, "probe_id", "beta", topK)
       .select("probe_id").collect().map(_.getString(0)).sorted.toSeq
+    require(topProbes.nonEmpty, "pcaCoords needs at least one probe, got an empty beta frame")
+    val nSamples = beta.agg(countDistinct(col("sample_id"))).head().getLong(0)
+    require(nSamples >= 2, s"pcaCoords needs at least 2 samples, got $nSamples")
     val topDf = topProbes.toDF("probe_id")
     val wide = beta.join(broadcast(topDf), Seq("probe_id"), "left_semi")
       .groupBy("sample_id").pivot("probe_id", topProbes).agg(first("beta"))
@@ -138,6 +141,7 @@ object Pca {
     import spark.implicits._
     val samples = beta.select("sample_id").distinct().as[String].collect().sorted
     val nS = samples.length
+    require(nS >= 1, "pcaAllCpg needs at least one sample, got an empty beta frame")
     val sdim = broadcast(samples.zipWithIndex.toSeq.toDF("sample_id", "__sid"))
     val mu = beta.groupBy("probe_id").agg(avg("beta").as("__mu"))
     val centered = beta.join(mu, "probe_id").join(sdim, "sample_id")

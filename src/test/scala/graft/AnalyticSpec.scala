@@ -192,4 +192,17 @@ class AnalyticSpec extends SparkSpec {
       .select(abs(agg("v") - naive("v")).as("d")).agg(max("d")).head().getDouble(0)
     assert(diff < 1e-9)
   }
+
+  test("the local Spearman pair-event budget admits exactly SpearmanLocalEventBudget steps") {
+    // one 24495-row probe group is C(24495, 2) = 299,990,265 pair steps;
+    // two-row groups add one step each, so 9,735 of them land on the
+    // 3·10⁸ budget exactly and one more goes over it
+    val big = new Array[Long](24495)
+    val pairs = Array.fill(9735)(new Array[Long](2))
+    assert(Analytic.SpearmanLocalEventBudget == 300000000L)
+    assert(Analytic.spearmanWithinEventBudget(big +: pairs))
+    assert(!Analytic.spearmanWithinEventBudget(big +: new Array[Long](2) +: pairs))
+    // single-row and empty groups carry no pair steps
+    assert(Analytic.spearmanWithinEventBudget(Array(new Array[Long](1), new Array[Long](0))))
+  }
 }

@@ -35,6 +35,23 @@ class PcaMdsSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
+  test("PCA and MDS fail with a named require on 0-row and 1-sample frames") {
+    val empty = Seq.empty[(String, String, Double)].toDF("probe_id", "sample_id", "beta")
+    val one = (0 until 10).map(p => (f"p$p%03d", "s0", 0.1 * p))
+      .toDF("probe_id", "sample_id", "beta")
+    def msg(f: => Any): String = intercept[IllegalArgumentException](f).getMessage
+    assert(msg(Pca.pcaCoords(empty, topK = 5, k = 2, scale = true)) ==
+      "requirement failed: pcaCoords needs at least one probe, got an empty beta frame")
+    assert(msg(Pca.pcaCoords(one, topK = 5, k = 2, scale = true)) ==
+      "requirement failed: pcaCoords needs at least 2 samples, got 1")
+    assert(msg(Pca.pcaAllCpg(empty, k = 2)) ==
+      "requirement failed: pcaAllCpg needs at least one sample, got an empty beta frame")
+    assert(msg(Mds.mdsCoords(spark, empty, topK = 5)) ==
+      "requirement failed: mdsCoords needs at least 2 samples, got 0")
+    assert(msg(Mds.mdsCoords(spark, one, topK = 5)) ==
+      "requirement failed: mdsCoords needs at least 2 samples, got 1")
+  }
+
   test("PCA all-CpG dual path matches the bounded path up to sign on complete input") {
     // complete matrix (every probe observed in every sample), topK covers
     // all probes -> both paths see the identical centered matrix
